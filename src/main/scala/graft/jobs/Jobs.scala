@@ -1,6 +1,6 @@
 package graft.jobs
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.{DataFrame, Row, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.{StreamingQuery, Trigger}
 
@@ -66,7 +66,7 @@ object Jobs {
         to_json(struct(col("date_str"), col("vehicleType"), col("avg_spent"))).as("v"))
     val all = revenue.unionByName(avgSpent).persist()
     try {
-      all.foreachPartition { (it: Iterator[org.apache.spark.sql.Row]) =>
+      all.foreachPartition { (it: Iterator[Row]) =>
         it.foreach(r => sink.put(r.getString(0), r.getString(1)))
       }
       all.count()
@@ -75,13 +75,30 @@ object Jobs {
 
   /** Every streaming entry point below takes `rocksDbState` (default true):
     * when set, the job configures the RocksDB state-store provider via
-    * [[StreamingConf.useRocksDbState]]. NOTE the scope: Spark exposes the
-    * provider only as a session conf, so opting in switches state backing
-    * for every stream started on this session afterwards, not just this
-    * job. Pass `rocksDbState = false` to leave the session conf untouched
-    * (existing checkpoints keep their original provider either way). */
-  private def configureState(spark: SparkSession, rocksDbState: Boolean): Unit =
+    * [[StreamingConf.useRocksDbState]]. Every one of them also registers
+    * [[graft.streaming.LocalCheckpointFileManager]] for checkpoint I/O via
+    * [[StreamingConf.useLocalCheckpointFileManager]] (unless the session
+    * already names a manager). NOTE the scope: Spark exposes both only as
+    * session confs, so each switches every stream started on this session
+    * afterwards, not just this job. Pass `rocksDbState = false` to leave
+    * the provider conf untouched (existing checkpoints keep their original
+    * provider either way).
+    *
+    * Starts `out` with `write` applied to every row of every micro-batch,
+    * per partition. */
+  private def deliver(spark: SparkSession, out: DataFrame, outputMode: String,
+                      checkpoint: String, availableNow: Boolean, rocksDbState: Boolean)
+                     (write: Row => Unit): StreamingQuery = {
     if (rocksDbState) StreamingConf.useRocksDbState(spark)
+    StreamingConf.useLocalCheckpointFileManager(spark)
+    val writer = out.writeStream
+      .outputMode(outputMode)
+      .option("checkpointLocation", checkpoint)
+      .foreachBatch { (batch: DataFrame, _: Long) =>
+        batch.foreachPartition { (it: Iterator[Row]) => it.foreach(write) }
+      }
+    (if (availableNow) writer.trigger(Trigger.AvailableNow()) else writer).start()
+  }
 
   /** §3.3 live view (reference repo-events): the slot materialized view as
     * a continuously-updating stream into a keyed sink — key
@@ -90,21 +107,14 @@ object Jobs {
   def liveSlotView(spark: SparkSession, source: EventSource, sink: KeyValueSink,
                    checkpoint: String, availableNow: Boolean = true,
                    rocksDbState: Boolean = true): StreamingQuery = {
-    configureState(spark, rocksDbState)
     val updates = LiveSlotView.updates(EventDecode.decode(source.stream(spark))).toDF()
       .select(
         concat_ws("-", col("parkingLotId"), col("parkingSpotId")).as("k"),
         to_json(struct(col("parkingLotId"), col("parkingSpotId"),
           col("occupied"), col("plate"))).as("v"))
-    val writer = updates.writeStream
-      .outputMode("update")
-      .option("checkpointLocation", checkpoint)
-      .foreachBatch { (batch: DataFrame, _: Long) =>
-        batch.foreachPartition { (it: Iterator[org.apache.spark.sql.Row]) =>
-          it.foreach(r => sink.put(r.getString(0), r.getString(1)))
-        }
-      }
-    (if (availableNow) writer.trigger(Trigger.AvailableNow()) else writer).start()
+    deliver(spark, updates, "update", checkpoint, availableNow, rocksDbState) { r =>
+      sink.put(r.getString(0), r.getString(1))
+    }
   }
 
   /** ST2/ST3 → S9: the watermarked hourly window stream delivered to a
@@ -118,22 +128,15 @@ object Jobs {
   def hourlyStatsStream(spark: SparkSession, source: EventSource, sink: KeyValueSink,
                         checkpoint: String, availableNow: Boolean = true,
                         rocksDbState: Boolean = true): StreamingQuery = {
-    configureState(spark, rocksDbState)
     val agg = graft.streaming.HourlyStatsStream.aggregates(
       EventDecode.decode(source.stream(spark)))
       .select(
         concat_ws(":", lit("parking-stats"), lit("hourly"),
           col("date_str"), col("hour_str"), col("parkingLotId")).as("k"),
         to_json(struct(col("entries"), col("exits"), col("occupancy"))).as("v"))
-    val writer = agg.writeStream
-      .outputMode("update")
-      .option("checkpointLocation", checkpoint)
-      .foreachBatch { (batch: DataFrame, _: Long) =>
-        batch.foreachPartition { (it: Iterator[org.apache.spark.sql.Row]) =>
-          it.foreach(r => sink.put(r.getString(0), r.getString(1)))
-        }
-      }
-    (if (availableNow) writer.trigger(Trigger.AvailableNow()) else writer).start()
+    deliver(spark, agg, "update", checkpoint, availableNow, rocksDbState) { r =>
+      sink.put(r.getString(0), r.getString(1))
+    }
   }
 
   /** §3.2 alerting (reference srvc-alert): violation stream into a keyed
@@ -143,22 +146,15 @@ object Jobs {
                   sink: KeyValueSink, checkpoint: String,
                   availableNow: Boolean = true,
                   rocksDbState: Boolean = true): StreamingQuery = {
-    configureState(spark, rocksDbState)
     val alerts = ViolationStream.alerts(
       EventDecode.decode(source.stream(spark)), ParkingModel.users(spark, usersDir))
       .select(
         concat(lit("alert:"), col("event_id")).as("k"),
         to_json(struct(col("vehicle_plate"), col("spot_id"), col("lot_id"),
           col("violation_type"), col("severity"), col("event_time"))).as("v"))
-    val writer = alerts.writeStream
-      .outputMode("append")
-      .option("checkpointLocation", checkpoint)
-      .foreachBatch { (batch: DataFrame, _: Long) =>
-        batch.foreachPartition { (it: Iterator[org.apache.spark.sql.Row]) =>
-          it.foreach(r => sink.put(r.getString(0), r.getString(1)))
-        }
-      }
-    (if (availableNow) writer.trigger(Trigger.AvailableNow()) else writer).start()
+    deliver(spark, alerts, "append", checkpoint, availableNow, rocksDbState) { r =>
+      sink.put(r.getString(0), r.getString(1))
+    }
   }
 
   /** §3.2 delivery leg (reference srvc-notifier AlertEventSubscriber.scala:
@@ -172,7 +168,6 @@ object Jobs {
                           notifier: AlertNotifier, checkpoint: String,
                           availableNow: Boolean = true,
                           rocksDbState: Boolean = true): StreamingQuery = {
-    configureState(spark, rocksDbState)
     val alerts = ViolationStream.alerts(
       EventDecode.decode(source.stream(spark)), ParkingModel.users(spark, usersDir))
       .select(
@@ -181,14 +176,8 @@ object Jobs {
           lit(" - Vehicle "), col("vehicle_plate"),
           lit(" at "), col("lot_id"), lit("/"), col("spot_id")).as("message"),
         col("event_time"))
-    val writer = alerts.writeStream
-      .outputMode("append")
-      .option("checkpointLocation", checkpoint)
-      .foreachBatch { (batch: DataFrame, _: Long) =>
-        batch.foreachPartition { (it: Iterator[org.apache.spark.sql.Row]) =>
-          it.foreach(r => notifier.notify(r.getString(0), r.getString(1), r.getString(2)))
-        }
-      }
-    (if (availableNow) writer.trigger(Trigger.AvailableNow()) else writer).start()
+    deliver(spark, alerts, "append", checkpoint, availableNow, rocksDbState) { r =>
+      notifier.notify(r.getString(0), r.getString(1), r.getString(2))
+    }
   }
 }

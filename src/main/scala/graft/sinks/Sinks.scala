@@ -1,10 +1,13 @@
 package graft.sinks
 
 import java.io.OutputStream
-import java.net.Socket
+import java.net.{InetSocketAddress, Socket}
 import java.nio.charset.StandardCharsets
 import java.nio.file.{Files, Paths, StandardOpenOption}
 import scala.collection.concurrent.TrieMap
+import scala.util.control.NonFatal
+
+import org.apache.spark.TaskContext
 
 /** Result-delivery sinks (SURVEY.md §2.1 S9/S10): keyed JSON documents and
   * time-series points, exactly the two Redis write shapes the reference
@@ -182,15 +185,27 @@ object Resp {
   * `foreachPartition`. Each put reads its FULL reply line synchronously —
   * never `available()`-drains — so replies stay aligned with commands,
   * error replies are always seen, and EOF is an error, not a silent
-  * success. Covered end-to-end against a loopback RESP server
-  * (RedisRegistrySpec's round trip); the key/value shaping also by the
+  * success. Connect and read time out after 5 s (like
+  * [[HttpWebhookNotifier]]), so a stalled server fails the put instead of
+  * hanging the task; inside a task the socket is closed when the task
+  * completes, elsewhere by [[close]]. Covered end-to-end against a
+  * loopback RESP server (RedisRegistrySpec's round trip, SinksSpec's
+  * stalled-server and close specs); the key/value shaping also by the
   * file/in-memory twins. */
 final class RedisKeyValueSink(host: String, port: Int = 6379) extends KeyValueSink {
   @transient private var socket: Socket = _
   @transient private var out: OutputStream = _
   private def ensure(): Unit = if (socket == null || socket.isClosed) {
-    socket = new Socket(host, port)
+    socket = new Socket()
+    socket.connect(new InetSocketAddress(host, port), RedisKeyValueSink.TimeoutMs)
+    socket.setSoTimeout(RedisKeyValueSink.TimeoutMs)
     out = socket.getOutputStream
+    Option(TaskContext.get()).foreach(_.addTaskCompletionListener[Unit](_ => close()))
+  }
+
+  /** Close the connection; the next put reconnects. */
+  def close(): Unit = synchronized {
+    if (socket != null) socket.close()
   }
 
   /** Read one CRLF-terminated reply line (simple string / error / integer
@@ -211,10 +226,21 @@ final class RedisKeyValueSink(host: String, port: Int = 6379) extends KeyValueSi
 
   def put(key: String, json: String): Unit = synchronized {
     ensure()
-    out.write(Resp.encode(Resp.jsonSet(key, json)))
-    out.flush()
-    val reply = readReplyLine()
+    val reply =
+      try {
+        out.write(Resp.encode(Resp.jsonSet(key, json)))
+        out.flush()
+        readReplyLine()
+      } catch {
+        // a timed-out or broken connection may still owe a reply: drop it
+        // so a later put starts on a fresh, aligned one
+        case NonFatal(e) => close(); throw e
+      }
     if (reply.startsWith("-"))
       throw new RuntimeException(s"redis error reply for $key: $reply")
   }
+}
+
+object RedisKeyValueSink {
+  val TimeoutMs: Int = 5000
 }

@@ -13,6 +13,8 @@ import org.apache.spark.sql.SparkSession
   * Callers opt in per session (the streaming job entry points in
   * [[graft.jobs.Jobs]] do it by default); Spark reads the provider at
   * query start, and existing checkpoints keep their original provider.
+  * Checkpoint I/O is a separate session conf,
+  * [[useLocalCheckpointFileManager]], that every `Jobs` stream applies.
   */
 object StreamingConf {
 
@@ -25,6 +27,17 @@ object StreamingConf {
     // delta-only commits; snapshot maintenance happens in the background
     spark.conf.set(
       "spark.sql.streaming.stateStore.rocksdb.changelogCheckpointing.enabled", "true")
+    spark
+  }
+
+  val CheckpointFileManagerKey: String = "spark.sql.streaming.checkpointFileManagerClass"
+
+  /** Write checkpoints on `file:` paths through [[LocalCheckpointFileManager]]
+    * for subsequently started streams, unless the session already names a
+    * checkpoint file manager. Other schemes keep Spark's own manager. */
+  def useLocalCheckpointFileManager(spark: SparkSession): SparkSession = {
+    if (spark.conf.getOption(CheckpointFileManagerKey).isEmpty)
+      spark.conf.set(CheckpointFileManagerKey, classOf[LocalCheckpointFileManager].getName)
     spark
   }
 }

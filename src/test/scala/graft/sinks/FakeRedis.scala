@@ -1,6 +1,7 @@
 package graft.sinks
 
 import java.net.{ServerSocket, Socket}
+import java.util.concurrent.atomic.AtomicInteger
 import scala.collection.concurrent.TrieMap
 
 /** Loopback fake Redis for the RESP sinks/sources (the NotifierSpec
@@ -10,9 +11,12 @@ import scala.collection.concurrent.TrieMap
   * RedisJSON GETs back via JSON.GET — the fake serves it to GET/MGET so
   * one store covers both write shapes) / cursored SCAN with MATCH
   * prefix globs and COUNT paging. Multi-connection: one thread per
-  * accepted socket, shared TrieMap store. */
+  * accepted socket, shared TrieMap store; counts connections accepted and
+  * connections the client closed. */
 final class FakeRedis {
   val store = TrieMap.empty[String, String]
+  val opened = new AtomicInteger
+  val closed = new AtomicInteger
   private val server = new ServerSocket(0, 50, java.net.InetAddress.getByName("127.0.0.1"))
   @volatile private var running = true
 
@@ -22,6 +26,7 @@ final class FakeRedis {
     while (running) {
       try {
         val s = server.accept()
+        opened.incrementAndGet()
         val t = new Thread(() => serve(s))
         t.setDaemon(true)
         t.start()
@@ -95,7 +100,7 @@ final class FakeRedis {
         }
       }
     } catch {
-      case _: Exception => // connection closed by client
+      case _: Exception => closed.incrementAndGet() // connection closed by client
     } finally s.close()
   }
 }

@@ -1,7 +1,12 @@
 package graft.sinks
 
+import java.net.{InetAddress, ServerSocket, Socket, SocketTimeoutException}
 import java.nio.charset.StandardCharsets
 import java.nio.file.{Files, Paths}
+import java.util.concurrent.LinkedBlockingQueue
+import org.apache.spark.sql.Row
+import org.scalatest.concurrent.Eventually._
+import org.scalatest.time.SpanSugar._
 import graft.SparkSpec
 import graft.ops.{HourlyDocs, ParkingAnalytics}
 
@@ -66,5 +71,39 @@ class SinksSpec extends SparkSpec {
       ("""\{"NbrEntries":\d+,"NbrExit":\d+,"Occupancy":\{[^}]*\},""" +
         """"RevenueSimulation":[0-9.]+,"VehicleTypes":\{[^}]*\}\}""")
     doc should include regex """"Occupancy":\{("lot-0\d":\d+,?)+\}"""
+  }
+
+  "RedisKeyValueSink" should "fail a put within its timeout when the server never replies" in {
+    val server = new ServerSocket(0, 50, InetAddress.getByName("127.0.0.1"))
+    val held = new LinkedBlockingQueue[Socket]()
+    val acceptor = new Thread(() => try held.put(server.accept()) catch { case _: Exception => })
+    acceptor.setDaemon(true)
+    acceptor.start()
+    try {
+      val sink = new RedisKeyValueSink("127.0.0.1", server.getLocalPort)
+      val t0 = System.nanoTime()
+      a[SocketTimeoutException] should be thrownBy sink.put("k", "{}")
+      val waitedMs = (System.nanoTime() - t0) / 1e6
+      waitedMs should be >= (RedisKeyValueSink.TimeoutMs * 0.9)
+      waitedMs should be < (RedisKeyValueSink.TimeoutMs * 3.0)
+    } finally {
+      server.close()
+      Option(held.poll()).foreach(_.close())
+    }
+  }
+
+  it should "close its connection when the writing task completes" in {
+    import spark.implicits._
+    val redis = new FakeRedis
+    try {
+      val sink = new RedisKeyValueSink("127.0.0.1", redis.port)
+      (1 to 40).map(i => (s"k$i", s"""{"v":$i}""")).toDF("k", "v").repartition(4)
+        .foreachPartition { (it: Iterator[Row]) =>
+          it.foreach(r => sink.put(r.getString(0), r.getString(1)))
+        }
+      redis.store.size shouldBe 40
+      redis.opened.get should be > 0
+      eventually(timeout(10.seconds)) { redis.closed.get shouldBe redis.opened.get }
+    } finally redis.stop()
   }
 }
