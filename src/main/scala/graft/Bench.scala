@@ -98,10 +98,8 @@ object Bench {
       name -> (System.nanoTime() - t0) / 1e9
     }
     val ok = results.filter { case (n, _) => !failed.contains(n) }
-    def jstr(s: String) = "\"" + s.replace("\\", "\\\\").replace("\"", "\\\"")
-      .replaceAll("[\\n\\r\\t]", " ") + "\""
-    val qs = (ok ++ phases).map { case (k, v) => jstr(k) + ":" + v }.mkString("{", ",", "}")
-    val errs = failed.map { case (k, v) => jstr(k) + ":" + jstr(v) }.mkString("{", ",", "}")
+    val qs = (ok ++ phases).map { case (k, v) => Json.quote(k) + ":" + v }.mkString("{", ",", "}")
+    val errs = failed.map { case (k, v) => Json.quote(k) + ":" + Json.quote(v) }.mkString("{", ",", "}")
     val total = ok.map(_._2).sum
     val line = s"""{"metric":"total","value":$total,"unit":"sec","queries":$qs,"errors":$errs,"sf":"$sfDir"}"""
     println(line)

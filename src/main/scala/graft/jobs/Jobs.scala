@@ -73,23 +73,21 @@ object Jobs {
     } finally all.unpersist(false)
   }
 
-  /** Every streaming entry point below takes `rocksDbState` (default true):
-    * when set, the job configures the RocksDB state-store provider via
-    * [[StreamingConf.useRocksDbState]]. Every one of them also registers
+  /** Every streaming entry point below configures the RocksDB state-store
+    * provider via [[StreamingConf.useRocksDbState]] and registers
     * [[graft.streaming.LocalCheckpointFileManager]] for checkpoint I/O via
     * [[StreamingConf.useLocalCheckpointFileManager]] (unless the session
     * already names a manager). NOTE the scope: Spark exposes both only as
     * session confs, so each switches every stream started on this session
-    * afterwards, not just this job. Pass `rocksDbState = false` to leave
-    * the provider conf untouched (existing checkpoints keep their original
-    * provider either way).
+    * afterwards, not just this job (existing checkpoints keep their
+    * original provider).
     *
     * Starts `out` with `write` applied to every row of every micro-batch,
     * per partition. */
   private def deliver(spark: SparkSession, out: DataFrame, outputMode: String,
-                      checkpoint: String, availableNow: Boolean, rocksDbState: Boolean)
+                      checkpoint: String, availableNow: Boolean)
                      (write: Row => Unit): StreamingQuery = {
-    if (rocksDbState) StreamingConf.useRocksDbState(spark)
+    StreamingConf.useRocksDbState(spark)
     StreamingConf.useLocalCheckpointFileManager(spark)
     val writer = out.writeStream
       .outputMode(outputMode)
@@ -105,14 +103,13 @@ object Jobs {
     * `"$lot-$spot"` exactly like RepoEventsApi.scala:39. Returns the
     * running query; callers own its lifecycle. */
   def liveSlotView(spark: SparkSession, source: EventSource, sink: KeyValueSink,
-                   checkpoint: String, availableNow: Boolean = true,
-                   rocksDbState: Boolean = true): StreamingQuery = {
+                   checkpoint: String, availableNow: Boolean = true): StreamingQuery = {
     val updates = LiveSlotView.updates(EventDecode.decode(source.stream(spark))).toDF()
       .select(
         concat_ws("-", col("parkingLotId"), col("parkingSpotId")).as("k"),
         to_json(struct(col("parkingLotId"), col("parkingSpotId"),
           col("occupied"), col("plate"))).as("v"))
-    deliver(spark, updates, "update", checkpoint, availableNow, rocksDbState) { r =>
+    deliver(spark, updates, "update", checkpoint, availableNow) { r =>
       sink.put(r.getString(0), r.getString(1))
     }
   }
@@ -126,15 +123,14 @@ object Jobs {
     * the cross-lot document of the batch job needs the whole hour and
     * remains [[hourlyStats]]'s output. */
   def hourlyStatsStream(spark: SparkSession, source: EventSource, sink: KeyValueSink,
-                        checkpoint: String, availableNow: Boolean = true,
-                        rocksDbState: Boolean = true): StreamingQuery = {
+                        checkpoint: String, availableNow: Boolean = true): StreamingQuery = {
     val agg = graft.streaming.HourlyStatsStream.aggregates(
       EventDecode.decode(source.stream(spark)))
       .select(
         concat_ws(":", lit("parking-stats"), lit("hourly"),
           col("date_str"), col("hour_str"), col("parkingLotId")).as("k"),
         to_json(struct(col("entries"), col("exits"), col("occupancy"))).as("v"))
-    deliver(spark, agg, "update", checkpoint, availableNow, rocksDbState) { r =>
+    deliver(spark, agg, "update", checkpoint, availableNow) { r =>
       sink.put(r.getString(0), r.getString(1))
     }
   }
@@ -144,15 +140,14 @@ object Jobs {
     * idempotent). */
   def alertStream(spark: SparkSession, source: EventSource, usersDir: String,
                   sink: KeyValueSink, checkpoint: String,
-                  availableNow: Boolean = true,
-                  rocksDbState: Boolean = true): StreamingQuery = {
+                  availableNow: Boolean = true): StreamingQuery = {
     val alerts = ViolationStream.alerts(
       EventDecode.decode(source.stream(spark)), ParkingModel.users(spark, usersDir))
       .select(
         concat(lit("alert:"), col("event_id")).as("k"),
         to_json(struct(col("vehicle_plate"), col("spot_id"), col("lot_id"),
           col("violation_type"), col("severity"), col("event_time"))).as("v"))
-    deliver(spark, alerts, "append", checkpoint, availableNow, rocksDbState) { r =>
+    deliver(spark, alerts, "append", checkpoint, availableNow) { r =>
       sink.put(r.getString(0), r.getString(1))
     }
   }
@@ -166,8 +161,7 @@ object Jobs {
     * stream. */
   def alertNotifierStream(spark: SparkSession, source: EventSource, usersDir: String,
                           notifier: AlertNotifier, checkpoint: String,
-                          availableNow: Boolean = true,
-                          rocksDbState: Boolean = true): StreamingQuery = {
+                          availableNow: Boolean = true): StreamingQuery = {
     val alerts = ViolationStream.alerts(
       EventDecode.decode(source.stream(spark)), ParkingModel.users(spark, usersDir))
       .select(
@@ -176,7 +170,7 @@ object Jobs {
           lit(" - Vehicle "), col("vehicle_plate"),
           lit(" at "), col("lot_id"), lit("/"), col("spot_id")).as("message"),
         col("event_time"))
-    deliver(spark, alerts, "append", checkpoint, availableNow, rocksDbState) { r =>
+    deliver(spark, alerts, "append", checkpoint, availableNow) { r =>
       notifier.notify(r.getString(0), r.getString(1), r.getString(2))
     }
   }

@@ -6,6 +6,8 @@ import java.nio.charset.StandardCharsets
 import com.sun.net.httpserver.{HttpExchange, HttpServer}
 import org.apache.spark.sql.DataFrame
 
+import graft.Json
+
 /** Minimal REST query surface over a materialized view — the engine-side
   * counterpart of the reference's repo-events HTTP API, which serves its
   * Redis-materialized latest-state view over REST
@@ -59,7 +61,7 @@ object QueryServer {
       rawLimit.map(_.toIntOption) match {
         case Some(None) =>
           respond(ex, 400, "application/json",
-            s"""{"error":${jsonStr(s"limit must be an integer, got '${rawLimit.get}'")}}""")
+            s"""{"error":${Json.quote(s"limit must be an integer, got '${rawLimit.get}'")}}""")
         case parsed =>
           try {
             val limit = parsed.flatten.getOrElse(100).max(0).min(maxLimit)
@@ -71,7 +73,7 @@ object QueryServer {
           } catch {
             case e: Throwable =>
               respond(ex, 500, "application/json",
-                s"""{"error":${jsonStr(Option(e.getMessage).getOrElse(e.getClass.getName))}}""")
+                s"""{"error":${Json.quote(Option(e.getMessage).getOrElse(e.getClass.getName))}}""")
           }
       }
     })
@@ -79,12 +81,4 @@ object QueryServer {
     server.start()
     server
   }
-
-  private def jsonStr(s: String): String =
-    "\"" + s.flatMap {
-      case '"' => "\\\""
-      case '\\' => "\\\\"
-      case c if c < ' ' => f"\\u${c.toInt}%04x"
-      case c => c.toString
-    } + "\""
 }

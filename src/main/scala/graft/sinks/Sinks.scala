@@ -182,10 +182,10 @@ object Resp {
 
 /** Redis JSON.SET sink over a raw socket (reference MainHourly.scala:
   * 173-188 semantics). Executor-side: one connection per partition via
-  * `foreachPartition`. Each put reads its FULL reply line synchronously —
-  * never `available()`-drains — so replies stay aligned with commands,
-  * error replies are always seen, and EOF is an error, not a silent
-  * success. Connect and read time out after 5 s (like
+  * `foreachPartition`. Each put reads its FULL reply synchronously with
+  * [[Resp.readReply]] — never `available()`-drains — so replies stay
+  * aligned with commands, error replies are always seen (UTF-8 intact),
+  * and EOF is an error, not a silent success. Connect and read time out after 5 s (like
   * [[HttpWebhookNotifier]]), so a stalled server fails the put instead of
   * hanging the task; inside a task the socket is closed when the task
   * completes, elsewhere by [[close]]. Covered end-to-end against a
@@ -208,36 +208,22 @@ final class RedisKeyValueSink(host: String, port: Int = 6379) extends KeyValueSi
     if (socket != null) socket.close()
   }
 
-  /** Read one CRLF-terminated reply line (simple string / error / integer
-    * replies — all JSON.SET can answer). Throws on EOF mid-reply. */
-  private def readReplyLine(): String = {
-    val in = socket.getInputStream
-    val sb = new StringBuilder
-    var prev = -1
-    while (true) {
-      val b = in.read()
-      if (b < 0) throw new RuntimeException("redis connection closed mid-reply")
-      if (prev == '\r' && b == '\n') return sb.dropRight(1).toString
-      sb.append(b.toChar)
-      prev = b
-    }
-    throw new IllegalStateException("unreachable")
-  }
-
   def put(key: String, json: String): Unit = synchronized {
     ensure()
     val reply =
       try {
         out.write(Resp.encode(Resp.jsonSet(key, json)))
         out.flush()
-        readReplyLine()
+        Resp.readReply(socket.getInputStream)
       } catch {
         // a timed-out or broken connection may still owe a reply: drop it
         // so a later put starts on a fresh, aligned one
         case NonFatal(e) => close(); throw e
       }
-    if (reply.startsWith("-"))
-      throw new RuntimeException(s"redis error reply for $key: $reply")
+    reply match {
+      case Resp.Err(msg) => throw new RuntimeException(s"redis error reply for $key: $msg")
+      case _ => ()
+    }
   }
 }
 

@@ -9,6 +9,7 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions.col
 import org.apache.spark.sql.types._
 
+import graft.Json
 import graft.sources.UserRegistry
 
 /** User CRUD over HTTP — the reference's repo-account surface
@@ -110,7 +111,7 @@ object UserApi {
 
     def logLine(r: org.apache.spark.sql.Row, op: String, mutSeq: Long,
                 expiresAt: Option[Long]): String = {
-      def s(i: Int) = if (r.isNullAt(i)) "null" else jsonStr(r.getString(i))
+      def s(i: Int) = if (r.isNullAt(i)) "null" else Json.quote(r.getString(i))
       val h = if (r.isNullAt(3)) "null" else r.getBoolean(3).toString
       s"""{"u_plate":${s(0)},"username":${s(1)},"email":${s(2)},"handicapped":$h,""" +
         s""""op":"$op","mut_seq":$mutSeq,"expires_at":${expiresAt.map(_.toString).getOrElse("null")}}"""
@@ -145,7 +146,7 @@ object UserApi {
               // immediately 404s — a caller bug, not a valid request
               respond(ex, 400, s"""{"error":"ttl must be > 0 seconds"}""")
             case (Left(err), _) =>
-              respond(ex, 400, s"""{"error":${jsonStr(err)}}""")
+              respond(ex, 400, s"""{"error":${Json.quote(err)}}""")
             case (Right(users), _) if sub == "" && users.length != 1 =>
               respond(ex, 400, s"""{"error":"POST /account takes exactly one user; use /account/bulk"}""")
             case (Right(users), t) =>
@@ -160,7 +161,7 @@ object UserApi {
           if (!exists) respond(ex, 404, s"""{"error":"no such user"}""")
           else {
             UserRegistry.appendLog(logDir, Seq(
-              s"""{"u_plate":${jsonStr(plate)},"username":null,"email":null,""" +
+              s"""{"u_plate":${Json.quote(plate)},"username":null,"email":null,""" +
                 s""""handicapped":null,"op":"delete","mut_seq":${seq.getAndIncrement()},"expires_at":null}"""))
             respond(ex, 204, "")
           }
@@ -169,7 +170,7 @@ object UserApi {
     } catch {
       case e: Throwable =>
         respond(ex, 500,
-          s"""{"error":${jsonStr(Option(e.getMessage).getOrElse(e.getClass.getName))}}""")
+          s"""{"error":${Json.quote(Option(e.getMessage).getOrElse(e.getClass.getName))}}""")
     }
 
     server.createContext("/health", (ex: HttpExchange) =>
@@ -178,12 +179,4 @@ object UserApi {
     server.start()
     server
   }
-
-  private def jsonStr(s: String): String =
-    "\"" + s.flatMap {
-      case '"' => "\\\""
-      case '\\' => "\\\\"
-      case c if c < ' ' => f"\\u${c.toInt}%04x"
-      case c => c.toString
-    } + "\""
 }

@@ -774,7 +774,7 @@ object TextDedup {
     * shuffle writer (`spark.shuffle.sort.bypassMergeThreshold`) for the
     * sort-based writer, which buffers, spills and merge-rewrites every
     * shuffle byte — doubling write volume on a single-disk box. The
-    * derivation is kept behind `-Dgraft.cc.parts=adaptive` (the CcBench
+    * derivation is kept behind `-Dgraft.cc.parts=adaptive` (the `Rehearse cc`
     * experiment-knob convention, like graft.cc.sym/join/ckpt) for
     * re-measurement on multi-disk clusters where the trade may flip;
     * production default = the measured-good session constant. The knob
@@ -833,8 +833,8 @@ object TextDedup {
     val lab0 = undirected.groupBy(col("src").as("id")).agg(min(col("dst")).as("mn"))
       .select(col("id"), least(col("id"), col("mn")).as("lab1"))
       .persist()
-    // checkpoint storage is an experiment knob for CcBench only
-    // (-Dgraft.cc.ckpt=heap reverts to deserialized MEMORY_AND_DISK):
+    // checkpoint storage is an experiment knob for the `Rehearse cc` rung
+    // only (-Dgraft.cc.ckpt=heap reverts to deserialized MEMORY_AND_DISK):
     // each round's label table is #nodes UnsafeRow objects; serialized
     // storage packs them into per-partition byte arrays, shrinking the
     // old-gen object census the 30M-edge rung's GC band was traced to.
@@ -949,8 +949,9 @@ object TextDedup {
         val roundT0 = System.nanoTime()
         val probed = next.agg(sum(when(col("chg"), 1L))).head()
         val changed = if (probed.isNullAt(0)) 0L else probed.getLong(0)
-        // dev observability only (CcBench sets it): where inside the loop
-        // a wide wall-time band lives — never on in production paths
+        // dev observability only (the `Rehearse cc` rung sets it): where
+        // inside the loop a wide wall-time band lives — never on in
+        // production paths
         if (sys.props.contains("graft.cc.debug"))
           println(f"[cc] round $round: ${(System.nanoTime() - roundT0) / 1e9}%.2f s" +
             f" changed=$changed")

@@ -11,7 +11,7 @@ import org.apache.spark.sql.functions.{size => arrSize}
 class ScaleCorpusSynthSpec extends SparkSpec {
 
   "synthCorpus" should "hold 10% exact-dup and 10% near-dup rates at any size" in {
-    val c = ScaleCorpusBench.synthCorpus(spark, 1000L).cache()
+    val c = Synth.synthCorpus(spark, 1000L).cache()
     c.count() shouldBe 1000L
     // x7 is an exact copy of x0: exactly 100 duplicated texts
     c.agg(countDistinct(col("text"))).head().getLong(0) shouldBe 900L
@@ -34,7 +34,7 @@ class ScaleCorpusSynthSpec extends SparkSpec {
   }
 
   "synthCorpusZipf" should "be Zipf-shaped with the same duplicate structure, and the capped miner must still find its near-dups" in {
-    val c = ScaleCorpusBench.synthCorpusZipf(spark, 1000L).cache()
+    val c = Synth.synthCorpusZipf(spark, 1000L).cache()
     c.count() shouldBe 1000L
     c.agg(countDistinct(col("text"))).head().getLong(0) shouldBe 900L
     // Zipf shape: the single most frequent token carries a constant
@@ -69,7 +69,7 @@ class ScaleCorpusSynthSpec extends SparkSpec {
 
   "synthEdges" should "produce ~1000-node components whose count scales with n" in {
     val groups = graft.text.TextDedup.duplicateGroups(
-      ScaleCorpusBench.synthEdges(spark, 100000L), "doc_a", "doc_b")
+      Synth.synthEdges(spark, 100000L), "doc_a", "doc_b")
     // 100k edges = blocks 0–999 fused in runs of 10, plus the final
     // id (100000) alone in block 1000 as a self-loop singleton
     val profile = groups.groupBy("group_id").count().cache()

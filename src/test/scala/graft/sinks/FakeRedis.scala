@@ -10,7 +10,8 @@ import scala.collection.concurrent.TrieMap
   * MGET / DEL / JSON.SET (stored as the plain value, like a real
   * RedisJSON GETs back via JSON.GET — the fake serves it to GET/MGET so
   * one store covers both write shapes) / cursored SCAN with MATCH
-  * prefix globs and COUNT paging. Multi-connection: one thread per
+  * prefix globs and COUNT paging; a JSON.SET of [[FakeRedis.RefusedKey]]
+  * gets a multi-byte UTF-8 error reply. Multi-connection: one thread per
   * accepted socket, shared TrieMap store; counts connections accepted and
   * connections the client closed. */
 final class FakeRedis {
@@ -57,6 +58,8 @@ final class FakeRedis {
           case other => throw new RuntimeException(s"bad command frame: $other")
         }
         cmd.head.toUpperCase match {
+          case "JSON.SET" if cmd(1) == FakeRedis.RefusedKey =>
+            reply(out, s"-${FakeRedis.RefusedMessage}\r\n")
           case "SET" | "JSON.SET" =>
             // JSON.SET key . json / SET key json — value is the last arg
             store.put(cmd(1), cmd.last)
@@ -103,4 +106,9 @@ final class FakeRedis {
       case _: Exception => closed.incrementAndGet() // connection closed by client
     } finally s.close()
   }
+}
+
+object FakeRedis {
+  val RefusedKey = "refused"
+  val RefusedMessage = "ERR clé refusée"
 }

@@ -30,10 +30,11 @@ class NotifierSpec extends SparkSpec {
   }
 
   it should "escape JSON-hostile characters in the message" in {
-    val p = WebhookPayload.render("LOW", "a \"quoted\"\nplate\\x", "t")
-    p should include("""a \"quoted\"\nplate\\x""")
+    val p = WebhookPayload.render("LOW", "a \"quoted\"\nplate\\x\u0001", "t")
+    p should include("""a \"quoted\"\nplate\\x""" + "\\u0001")
     // the rendered document must stay one line of valid JSON
     p should not include "\n"
+    p should not include "\u0001"
   }
 
   "HttpWebhookNotifier" should "POST the payload and tolerate server errors" in {

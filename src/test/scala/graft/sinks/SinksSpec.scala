@@ -92,6 +92,19 @@ class SinksSpec extends SparkSpec {
     }
   }
 
+  it should "report an error reply with its key and UTF-8 message intact" in {
+    val redis = new FakeRedis
+    val sink = new RedisKeyValueSink("127.0.0.1", redis.port)
+    try {
+      val e = the[RuntimeException] thrownBy sink.put(FakeRedis.RefusedKey, "{}")
+      e.getMessage should include(FakeRedis.RefusedKey)
+      e.getMessage should include(FakeRedis.RefusedMessage)
+      // the error reply was consumed whole: the next put stays aligned
+      sink.put("k", "{}")
+      redis.store.get("k") shouldBe Some("{}")
+    } finally { sink.close(); redis.stop() }
+  }
+
   it should "close its connection when the writing task completes" in {
     import spark.implicits._
     val redis = new FakeRedis
