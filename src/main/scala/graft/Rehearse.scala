@@ -971,12 +971,13 @@ object Rehearse {
     * so the band (and any memory-shape fix) is quantified without paying
     * the whole ladder per sample. Default: the adaptive operator as
     * shipped, one `dedup_groups_cc` line per rep with wall, GC, rounds and
-    * exchange/spill totals, plus the per-round `[cc]` walls
-    * (graft.cc.debug) the round-16 rung record quotes. `iterative`
-    * forces the distributed loop (`localEdgeThreshold = 0`) whatever the
-    * size, so the loop is measured without the union-find path absorbing
-    * the rung (how the round-8 delta-iteration experiment was priced),
-    * one `cc_iterative` line per rep. */
+    * exchange/spill totals. `iterative` forces the distributed loop
+    * (`localEdgeThreshold = 0`) whatever the size, so the loop is
+    * measured without the union-find path absorbing the rung (how the
+    * round-8 delta-iteration experiment was priced), one `cc_iterative`
+    * line per rep. Both records carry the operator's round log
+    * ([[TextDedup.lastRounds]]) as `round_sec` (each round's wall) and
+    * `round_changed` (labels it changed; 0 closes the loop). */
   private def cc(spark: SparkSession, args: Seq[String]): Unit = {
     val n = args.headOption.map(_.toLong).getOrElse(30000000L)
     val reps = args.lift(1).map(_.toInt).getOrElse(3)
@@ -986,7 +987,6 @@ object Rehearse {
       case Some(other) => throw new IllegalArgumentException(
         s"cc: third argument must be 'iterative', got '$other'")
     }
-    if (!iterative) System.setProperty("graft.cc.debug", "1")
     def gcMillis(): Long = {
       import scala.jdk.CollectionConverters._
       java.lang.management.ManagementFactory.getGarbageCollectorMXBeans
@@ -1003,13 +1003,14 @@ object Rehearse {
       }
       val gcSec = (gcMillis() - gc0) / 1000.0
       edges.unpersist(true)
+      val log = TextDedup.lastRounds
+      val roundFields = Seq("rounds" -> log.length,
+        "round_sec" -> log.map(r => dec(r._1)), "round_changed" -> log.map(_._2))
       if (iterative)
-        emit("cc_iterative", "edges" -> n, "sec" -> dec(sec),
-          "rounds" -> TextDedup.lastRounds)
+        emit("cc_iterative", Seq("edges" -> n, "sec" -> dec(sec)) ++ roundFields: _*)
       else
         emit("dedup_groups_cc", Seq("edges" -> n, "rep" -> rep, "sec" -> dec(sec),
-          "gc_sec" -> dec(gcSec), "rounds" -> TextDedup.lastRounds) ++
-          snap.fields: _*)
+          "gc_sec" -> dec(gcSec)) ++ roundFields ++ snap.fields: _*)
     }
   }
 

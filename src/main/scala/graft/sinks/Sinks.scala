@@ -114,9 +114,6 @@ object Resp {
   }
 
   def jsonSet(key: String, json: String): Seq[String] = Seq("JSON.SET", key, ".", json)
-  def tsAdd(series: String, ts: Long, value: Double): Seq[String] =
-    Seq("TS.ADD", series, ts.toString, value.toString)
-  def tsCreate(series: String): Seq[String] = Seq("TS.CREATE", series, "RETENTION", "0")
 
   /** A decoded RESP2 reply. Bulk(None) is the nil bulk string ($-1) a GET
     * of a missing key returns; Arr holds SCAN/MGET results. */

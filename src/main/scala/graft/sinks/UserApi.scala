@@ -7,10 +7,9 @@ import java.util.concurrent.atomic.AtomicLong
 import com.sun.net.httpserver.{HttpExchange, HttpServer}
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions.col
-import org.apache.spark.sql.types._
 
 import graft.Json
-import graft.sources.UserRegistry
+import graft.sources.{RedisRegistry, UserRegistry}
 
 /** User CRUD over HTTP — the reference's repo-account surface
   * (apps/repo-account/.../UserApi.scala:31-80: GET/POST /account,
@@ -28,12 +27,6 @@ import graft.sources.UserRegistry
   * decode path the event lake uses, so malformed bodies 400 instead of
   * corrupting the log. */
 object UserApi {
-
-  private val userSchema = StructType(Seq(
-    StructField("u_plate", StringType),
-    StructField("username", StringType),
-    StructField("email", StringType),
-    StructField("handicapped", BooleanType)))
 
   /** One mut_seq counter per log directory per JVM, guarded by an
     * exclusive cross-process file lock: mut_seq is the registry's total
@@ -103,7 +96,7 @@ object UserApi {
       import spark.implicits._
       val lines = body.split("\n").map(_.trim).filter(_.nonEmpty).toSeq
       if (lines.isEmpty) return Left("empty body")
-      val rows = spark.read.schema(userSchema).json(lines.toDS).collect().toSeq
+      val rows = spark.read.schema(RedisRegistry.userSchema).json(lines.toDS).collect().toSeq
       if (rows.length != lines.length || rows.exists(_.isNullAt(0)))
         Left("every line must be a JSON object with a u_plate")
       else Right(rows)

@@ -1,12 +1,12 @@
 package graft.sources
 
-import java.net.Socket
+import java.net.{InetSocketAddress, Socket}
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
 
-import graft.sinks.Resp
+import graft.sinks.{RedisKeyValueSink, Resp}
 
 /** Redis KV read-back loader — the reference's `UserService.getAllUsers`
   * scan path (apps/repo-account/src/main/scala/repo_account/domain/
@@ -34,7 +34,9 @@ import graft.sinks.Resp
 object RedisRegistry {
 
   /** The engine's UserModel surface (reference UserModel.scala:6-14
-    * trimmed to the dimension fields the analytics consume). */
+    * trimmed to the dimension fields the analytics consume) — the one
+    * user schema: [[graft.sinks.UserApi]] parses request bodies with it
+    * and [[UserRegistry.mutationSchema]] extends it. */
   val userSchema: StructType = StructType(Seq(
     StructField("u_plate", StringType),
     StructField("username", StringType),
@@ -56,11 +58,15 @@ object RedisRegistry {
     * chunked MGET on one synchronous connection. Keys SCAN
     * returned that vanish before their MGET (expired temporaries — the
     * reference's setex users) come back nil and are dropped, exactly the
-    * `Option(jedis.get(key)).flatMap(...)` null-skip. */
+    * `Option(jedis.get(key)).flatMap(...)` null-skip. Connect and each
+    * read time out after [[RedisKeyValueSink.TimeoutMs]], so a stalled
+    * server fails the load instead of hanging the driver. */
   def scanValues(host: String, port: Int, keyPrefix: String,
                  scanCount: Int = 512): Seq[(String, String)] = {
-    val socket = new Socket(host, port)
+    val socket = new Socket()
     try {
+      socket.connect(new InetSocketAddress(host, port), RedisKeyValueSink.TimeoutMs)
+      socket.setSoTimeout(RedisKeyValueSink.TimeoutMs)
       val out = socket.getOutputStream
       val in = socket.getInputStream
       def command(args: String*): Resp.Reply = {

@@ -28,11 +28,7 @@ object UserRegistry {
     * dimension surface) + CDC bookkeeping. `op` ∈ {upsert, delete};
     * `mut_seq` is the total order (later wins); `expires_at` (epoch s,
     * null = permanent) models createTemporaryUser's TTL. */
-  val mutationSchema: StructType = StructType(Seq(
-    StructField("u_plate", StringType),
-    StructField("username", StringType),
-    StructField("email", StringType),
-    StructField("handicapped", BooleanType),
+  val mutationSchema: StructType = StructType(RedisRegistry.userSchema.fields ++ Seq(
     StructField("op", StringType),
     StructField("mut_seq", LongType),
     StructField("expires_at", LongType)))

@@ -660,7 +660,7 @@ object TextDedup {
     * 222 GB spill at 500M edges); the frontier loop's rounds ≥ 1 shuffle
     * the frontier, the matched edges' aggregate, and the candidate merge
     * — all frontier-sized — and once the frontier fits a broadcast
-    * ([[frontierBroadcastRows]]) the full label frame stops moving at
+    * ([[FrontierBroadcastRows]]) the full label frame stops moving at
     * all: its hash(id) partitioning and in-partition ordering flow from
     * checkpoint to checkpoint, so the merge join re-exchanges and
     * re-sorts nothing. Each label frame is lazily `localCheckpoint`ed
@@ -677,10 +677,12 @@ object TextDedup {
     * standard iterative-graph trade, same as GraphX's periodic
     * checkpointing (swap for reliable `checkpoint()` on preemptible
     * clusters; see [[graft.ops.Adaptive.materialize]]). */
-  /** Rounds the last [[duplicateGroups]] call ran before reaching its
-    * fixpoint (including the confirming round) — observability for tests
-    * and benchmarks; not part of the operator contract. */
-  @volatile private[graft] var lastRounds: Int = 0
+  /** Per-round log of the last [[duplicateGroups]] call: (wall seconds,
+    * changed labels) for every round it ran, the confirming zero-change
+    * round last; the union-find path logs its one exact pass as
+    * (wall, 0). Observability for tests and benchmarks; not part of the
+    * operator contract. */
+  @volatile private[graft] var lastRounds: Seq[(Double, Long)] = Seq.empty
 
   def duplicateGroups(pairs: DataFrame, aCol: String, bCol: String,
                       maxIters: Int = 25,
@@ -713,7 +715,7 @@ object TextDedup {
       // pure overhead, at ANY cluster size.
       val edgeCount = e.count()
       if (edgeCount <= localEdgeThreshold) localUnionFind(e)
-      else iterativeGroups(e, maxIters, edgeCount)
+      else iterativeGroups(e, maxIters)
     } finally { e.unpersist(false) }
   }
 
@@ -726,6 +728,7 @@ object TextDedup {
   private def localUnionFind(e: DataFrame): DataFrame = {
     val spark = e.sparkSession
     import spark.implicits._
+    val t0 = System.nanoTime()
     val flat = e.toDF("_1", "_2").as[(Long, Long)].coalesce(1)
       .mapPartitions { it =>
         // primitive open-addressing map (16 B/slot, 0.75 load): the boxed
@@ -754,75 +757,23 @@ object TextDedup {
       }
       .toDF("doc_id", "group_id")
       .localCheckpoint(true)
-    lastRounds = 1
+    lastRounds = Seq(((System.nanoTime() - t0) / 1e9, 0L))
     flat.orderBy("doc_id")
   }
 
+  /** Frontier rows at or below this broadcast in the frontier rounds:
+    * 2M (long, long) rows is a ~64 MB broadcast relation — comfortably
+    * inside the driver/executor budget at any deployment size, far under
+    * the 8 GB broadcast cap. */
+  private val FrontierBroadcastRows: Long = 2000000L
+
   /** The distributed path: iterative min-label propagation with pointer
-    * jumping over the (already persisted) edge list.
-    *
-    * Partitioning stays at the session's `spark.sql.shuffle.partitions`.
-    * The obvious "fix" for the 500M-edge rung's spill (222 GB disk spill
-    * from 47M-row tasks at the 32-partition session constant) — deriving
-    * the loop's partition count from the measured edge count
-    * ([[graft.ops.Adaptive.loopShufflePartitions]], ~4M sym rows per
-    * partition) — was implemented and MEASURED WORSE on the r16 rung:
-    * rounds 0/1 slowed 559/540 s vs 180/632 s and the run died of disk
-    * exhaustion mid-loop (bench_records/r16_cc.md). Plausible mechanism:
-    * at >200 reduce partitions the loop's combine-free exchanges
-    * (repartition, label-side join shuffles) leave the bypass-merge
-    * shuffle writer (`spark.shuffle.sort.bypassMergeThreshold`) for the
-    * sort-based writer, which buffers, spills and merge-rewrites every
-    * shuffle byte — doubling write volume on a single-disk box. The
-    * derivation is kept behind `-Dgraft.cc.parts=adaptive` (the `Rehearse cc`
-    * experiment-knob convention, like graft.cc.sym/join/ckpt) for
-    * re-measurement on multi-disk clusters where the trade may flip;
-    * production default = the measured-good session constant. The knob
-    * scopes the conf for the loop and restores it on exit; results are
-    * partitioning-independent (min-label fixpoint; callers order).
-    *
-    * Two scope caveats the knob's user must know (it is an EXPERIMENT
-    * knob, not a production default, precisely because of these):
-    * the session-conf mutation assumes ONE query at a time on the
-    * SparkSession — a concurrent query planned during the loop silently
-    * inherits the scoped count, and two concurrent duplicateGroups calls
-    * can clobber each other's saved value (run the loop in
-    * `spark.newSession()` if that ever matters); and the returned frame's
-    * final `orderBy(doc_id)` plans lazily at the CALLER's action, after
-    * the finally has restored the constant — the loop's joins/aggregates
-    * run scoped, the final ~|V|-row range sort deliberately does not
-    * (it is outside the loop the knob exists to measure).
-    *
-    * `rowsPerPartition` is the derivation's density target, threaded as a
-    * parameter so tests can force a scoped value different from the
-    * session constant on a small graph and assert the restore actually
-    * happens (TextDedupSpec). */
-  private[graft] def iterativeGroups(e: DataFrame, maxIters: Int,
-                                     edgeCount: Long,
-                                     rowsPerPartition: Long = 4000000L): DataFrame = {
-    if (!sys.props.get("graft.cc.parts").contains("adaptive"))
-      iterativeGroupsBody(e, maxIters)
-    else {
-      val spark = e.sparkSession
-      val partKey = "spark.sql.shuffle.partitions"
-      val sessionParts = spark.conf.get(partKey).toInt
-      // sym rows = 2·|E| (the loop's biggest table; self-loops are gone)
-      val nPart = graft.ops.Adaptive.loopShufflePartitions(
-        2L * edgeCount, sessionParts, rowsPerPartition)
-      spark.conf.set(partKey, nPart)
-      try iterativeGroupsBody(e, maxIters)
-      finally spark.conf.set(partKey, sessionParts)
-    }
-  }
-
-  /** Frontier rows at or below this broadcast in the frontier rounds
-    * (`-Dgraft.cc.bcast=<rows>` overrides): 2M (long, long) rows is a
-    * ~64 MB broadcast relation — comfortably inside the driver/executor
-    * budget at any deployment size, far under the 8 GB broadcast cap. */
-  private def frontierBroadcastRows: Long =
-    sys.props.get("graft.cc.bcast").map(_.toLong).getOrElse(2000000L)
-
-  private def iterativeGroupsBody(e: DataFrame, maxIters: Int): DataFrame = {
+    * jumping over the (already persisted) edge list. Partitioning stays
+    * at the session's `spark.sql.shuffle.partitions`: a count derived
+    * from the edge count measured slower and ran out of disk on the
+    * 500M-edge rung (bench_records/r16_cc.md). Results are
+    * partitioning-independent (min-label fixpoint; callers order). */
+  private def iterativeGroups(e: DataFrame, maxIters: Int): DataFrame = {
     val undirected = e.union(e.select(col("dst").as("src"), col("src").as("dst")))
     // Round-0 labels straight from the undirected edges: lab1 =
     // min(own id, min in-neighbor) = least(src, min(dst)). Persisted for
@@ -833,26 +784,20 @@ object TextDedup {
     val lab0 = undirected.groupBy(col("src").as("id")).agg(min(col("dst")).as("mn"))
       .select(col("id"), least(col("id"), col("mn")).as("lab1"))
       .persist()
-    // checkpoint storage is an experiment knob for the `Rehearse cc` rung
-    // only (-Dgraft.cc.ckpt=heap reverts to deserialized MEMORY_AND_DISK):
-    // each round's label table is #nodes UnsafeRow objects; serialized
-    // storage packs them into per-partition byte arrays, shrinking the
-    // old-gen object census the 30M-edge rung's GC band was traced to.
-    val ckptLevel =
-      if (sys.props.get("graft.cc.ckpt").contains("heap"))
-        org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK
-      else org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK_SER
+    // serialized checkpoints: each round's label table is #nodes UnsafeRow
+    // objects; deserialized storage measured the same wall with ~3× the GC
+    // (bench_records/r11_scaling.md)
+    val ckptLevel = org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK_SER
     // symmetric closure (2·|E| rows — the per-node self-loops are gone:
     // the merge step below folds each node's own label in directly),
     // partitioned by dst — the key of EVERY round's edge⋈frontier join —
     // so the materialized edges satisfy the join's distribution and each
     // round shuffles only the frontier plus the post-join groupBy(src)
     // stage. ...and SORTED by that key within partitions: the shuffle-mode
-    // rounds merge-join against it, and an UNSORTED cached sym pays a
-    // fresh 2·|E|-row SortExec on the edge side in EVERY such round —
-    // the dominant per-round cost the r13 100M rung surfaced (measured on
-    // the 30M rung — r14_cc_sym.md; -Dgraft.cc.sym=unsorted reverts for
-    // the experiment's baseline arm). A lazy LOCAL CHECKPOINT rather than
+    // rounds merge-join against it, and an unsorted sym pays a fresh
+    // 2·|E|-row sort in every such round; a shuffle-hash join instead of
+    // the merge join measured no better (bench_records/r14_cc_sym.md).
+    // A lazy LOCAL CHECKPOINT rather than
     // a persist: it materializes at its first consumer (round 1's
     // candidate join) exactly like the persist did, but truncates lineage,
     // so the repartition's shuffle files and the caller's edge cache stop
@@ -861,16 +806,15 @@ object TextDedup {
     // sym simultaneously (bench_records/r16_cc.md); after round 1 the
     // loop now frees the first two eagerly (the executor-loss trade is
     // the loop's documented localCheckpoint trade, unchanged).
-    val symBase = undirected.repartition(col("dst"))
-    val symSorted =
-      if (sys.props.get("graft.cc.sym").contains("unsorted")) symBase
-      else symBase.sortWithinPartitions("dst")
-    val sym = symSorted.localCheckpoint(false, ckptLevel)
+    val sym = undirected.repartition(col("dst")).sortWithinPartitions("dst")
+      .localCheckpoint(false, ckptLevel)
+    val log = Seq.newBuilder[(Double, Long)]
     try {
       var labels: DataFrame = null
       var frontierRows = 0L
       var round = 0
       while (round < maxIters) {
+        val roundT0 = System.nanoTime()
         val next =
           if (round == 0) {
             // Round 0 is the one full-width round: labels are the identity
@@ -891,10 +835,10 @@ object TextDedup {
             // volume decay with convergence instead of re-shuffling every
             // vertex every round — the r16 500M rung re-shuffled the full
             // label table 5× (117 GB written, 222 GB spilled); the decay
-            // is visible as the per-round changed counts in the [cc]
-            // debug lines and in bench_records/r17_cc.md.
+            // is visible as the per-round changed counts in [[lastRounds]]
+            // and in bench_records/r17_cc.md.
             val fr = labels.filter(col("chg"))
-            val small = frontierRows <= frontierBroadcastRows
+            val small = frontierRows <= FrontierBroadcastRows
             // when the frontier fits a broadcast, BOTH frontier joins run
             // broadcast-hash: the round then shuffles only the candidate
             // aggregate's matched edges, and the label frame's hash(id)
@@ -903,15 +847,10 @@ object TextDedup {
             // full label side.
             def maybeBcast(df: DataFrame): DataFrame =
               if (small) broadcast(df) else df
-            // experiment knob (-Dgraft.cc.join=shj): in shuffle mode,
-            // build a per-partition hash table on the frontier side
-            // instead of merge-joining against the sorted sym
-            val fd0 = fr.select(col("id").as("dst"), col("label").as("dl"))
-            val fd = if (!small && sys.props.get("graft.cc.join").contains("shj"))
-              fd0.hint("SHUFFLE_HASH") else fd0
             // candidate updates: min changed-neighbor label per vertex
             // adjacent to the frontier — the only edge work this round
-            val cand = sym.join(maybeBcast(fd), Seq("dst"))
+            val cand = sym.join(
+                maybeBcast(fr.select(col("id").as("dst"), col("label").as("dl"))), Seq("dst"))
               .groupBy(col("src").as("id")).agg(min(col("dl")).as("cmin"))
             // delayed pointer jump: a vertex whose LABEL is a node that
             // just changed adopts that node's new label (jmp < label by
@@ -946,15 +885,9 @@ object TextDedup {
         // at sf0.1. The probe counts the round's changed labels: it both
         // decides convergence (0 = fixpoint) and feeds next round's
         // broadcast-vs-shuffle choice.
-        val roundT0 = System.nanoTime()
         val probed = next.agg(sum(when(col("chg"), 1L))).head()
         val changed = if (probed.isNullAt(0)) 0L else probed.getLong(0)
-        // dev observability only (the `Rehearse cc` rung sets it): where
-        // inside the loop a wide wall-time band lives — never on in
-        // production paths
-        if (sys.props.contains("graft.cc.debug"))
-          println(f"[cc] round $round: ${(System.nanoTime() - roundT0) / 1e9}%.2f s" +
-            f" changed=$changed")
+        log += (((System.nanoTime() - roundT0) / 1e9, changed))
         // next is materialized past its inputs now — release the PREVIOUS
         // round's checkpoint blocks instead of retaining one generation
         // per round for the loop's whole life (the accumulation OOM'd the
@@ -971,7 +904,6 @@ object TextDedup {
         if (changed == 0L) {
           // fixpoint: no label moved this round, so every edge is
           // label-consistent in both directions; return the flat frame
-          lastRounds = round + 1
           return next.select(col("id").as("doc_id"), col("label").as("group_id"))
             .orderBy("doc_id")
         }
@@ -983,6 +915,7 @@ object TextDedup {
         s"duplicateGroups did not converge in $maxIters rounds — " +
           "a component has diameter above maxIters; raise it")
     } finally { // e is released by the caller
+      lastRounds = log.result()
       org.apache.spark.sql.GraftSqlBridge.releaseCheckpoint(sym)
       lab0.unpersist(false)
     }

@@ -25,6 +25,17 @@ class RehearseSpec extends SparkSpec {
   "Rehearse" should "print only JSON records from the cc, stream_state and composed_stream rungs" in {
     val cc = rehearse("cc", "20000", "1", "iterative")
     ops(cc) shouldBe Set("cc_iterative")
+    // the round log: one entry per round, every round but the
+    // confirming last one changed some label
+    val (rounds, changed, secs) = {
+      import spark.implicits._
+      spark.read.json(cc.toDS()).selectExpr("rounds", "round_changed", "size(round_sec)")
+        .as[(Long, Seq[Long], Int)].head()
+    }
+    changed should have length rounds
+    secs.toLong shouldBe rounds
+    changed.last shouldBe 0L
+    changed.init.foreach(_ should be > 0L)
 
     val state = rehearse("stream_state", "2", "200")
     ops(state) shouldBe Set("span_dedup_stream_compute", "span_dedup_stream_state",

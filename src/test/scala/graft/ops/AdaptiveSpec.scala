@@ -1,10 +1,13 @@
 package graft.ops
 
+import org.apache.spark.sql.Row
 import org.apache.spark.sql.functions._
+import org.apache.spark.storage.StorageLevel
 import org.scalatest.flatspec.AnyFlatSpec
 import org.scalatest.matchers.should.Matchers
 
 import graft.SparkSpec
+import graft.text.TextCuration
 
 /** The data-adaptive knob derivations (round-8 verdict item: "make
   * numRanges/nCells data-adaptive"): the unit contract on the formulas
@@ -33,23 +36,6 @@ class AdaptiveFormulaSpec extends AnyFlatSpec with Matchers {
     an[IllegalArgumentException] should be thrownBy Adaptive.resolveRanges(-1, 10L)
     Adaptive.resolveRanges(7, 10L) shouldBe 7 // explicit value wins verbatim
     Adaptive.resolveRanges(Adaptive.Auto, 10L) shouldBe 32
-  }
-
-  "Adaptive.loopShufflePartitions" should "hold the session floor at bench scale and grow with rows" in {
-    // bench scale (sf0.1 pair graphs are « 4M rows): the current session
-    // setting wins, so every bench-scale plan stays bit-identical
-    Adaptive.loopShufflePartitions(0L, current = 32) shouldBe 32
-    Adaptive.loopShufflePartitions(1000000L, current = 32) shouldBe 32
-    Adaptive.loopShufflePartitions(1000000L, current = 8) shouldBe 8
-    // past the floor: ceil(rows / 4M) — the 500M-edge rung (sym = 1.5B
-    // rows) gets 375 partitions instead of the constant 32
-    Adaptive.loopShufflePartitions(1500000000L, current = 32) shouldBe 375
-    // capped (shuffle block count is cap², guide §2.2) — unless the
-    // session itself is set higher, which always wins
-    Adaptive.loopShufflePartitions(100000000000L, current = 32) shouldBe 4096
-    Adaptive.loopShufflePartitions(100L, current = 8192) shouldBe 8192
-    an[IllegalArgumentException] should be thrownBy
-      Adaptive.loopShufflePartitions(10L, current = 0)
   }
 
   "Adaptive.ivfCells" should "follow the sqrt rule between floor and cap" in {
@@ -209,5 +195,43 @@ class AdaptiveWiringSpec extends SparkSpec {
     // single row: span 1 clamps nR to 1, bucket 0
     Adaptive.withRangeBucket(Seq(42L).toDF("id"), "id", 4)
       .collect().map(_.getLong(1)).toSeq shouldBe Seq(0L)
+  }
+
+  /** Run `f` under `-Dgraft.materialize=mode`, back to the default after. */
+  private def underMode[T](mode: String)(f: => T): T = {
+    System.setProperty("graft.materialize", mode)
+    try f finally System.clearProperty("graft.materialize")
+  }
+
+  "Adaptive.materialize" should "give a prefix-sum operator identical rows under local and reliable" in {
+    import spark.implicits._
+    val docs = (1 to 300).map(i => (3L * i, Seq.fill(1 + i % 7)(s"w$i").mkString(" ")))
+      .toDF("id", "text")
+    def packed(mode: String): Seq[Row] = underMode(mode) {
+      TextCuration.sequencePacking(docs, "id", "text", budgetTokens = 16L, numRanges = 4)
+        .collect().toSeq
+    }
+    val local = packed("local")
+    local should have size 300
+    packed("reliable") shouldBe local
+    // the modes really differ: reliable persists the boundary's input
+    // (lineage kept), local checkpoints it and leaves no cache entry
+    val n = docs.select(col("id"), (col("id") % 7).as("w"))
+    underMode("local") {
+      Adaptive.withRangeBucket(n, "id", 4).count()
+      n.storageLevel shouldBe StorageLevel.NONE
+    }
+    underMode("reliable") {
+      try {
+        Adaptive.withRangeBucket(n, "id", 4).count()
+        n.storageLevel shouldBe StorageLevel.MEMORY_AND_DISK
+      } finally n.unpersist()
+    }
+  }
+
+  it should "reject an unknown mode, naming the valid ones" in {
+    val e = the[IllegalArgumentException] thrownBy
+      underMode("eager")(Adaptive.materialize(spark.range(3).toDF("id")))
+    e.getMessage should (include("'eager'") and include("local") and include("reliable"))
   }
 }

@@ -111,4 +111,19 @@ final class FakeRedis {
 object FakeRedis {
   val RefusedKey = "refused"
   val RefusedMessage = "ERR clé refusée"
+
+  /** Run `f(port)` against a loopback server that accepts one connection
+    * and never answers — the stalled server a client timeout must bound. */
+  def withStalledServer[T](f: Int => T): T = {
+    val server = new ServerSocket(0, 50, java.net.InetAddress.getByName("127.0.0.1"))
+    val held = new java.util.concurrent.LinkedBlockingQueue[Socket]()
+    val acceptor = new Thread(() => try held.put(server.accept()) catch { case _: Exception => })
+    acceptor.setDaemon(true)
+    acceptor.start()
+    try f(server.getLocalPort)
+    finally {
+      server.close()
+      Option(held.poll()).foreach(_.close())
+    }
+  }
 }

@@ -1,9 +1,8 @@
 package graft.sinks
 
-import java.net.{InetAddress, ServerSocket, Socket, SocketTimeoutException}
+import java.net.SocketTimeoutException
 import java.nio.charset.StandardCharsets
 import java.nio.file.{Files, Paths}
-import java.util.concurrent.LinkedBlockingQueue
 import org.apache.spark.sql.Row
 import org.scalatest.concurrent.Eventually._
 import org.scalatest.time.SpanSugar._
@@ -74,21 +73,13 @@ class SinksSpec extends SparkSpec {
   }
 
   "RedisKeyValueSink" should "fail a put within its timeout when the server never replies" in {
-    val server = new ServerSocket(0, 50, InetAddress.getByName("127.0.0.1"))
-    val held = new LinkedBlockingQueue[Socket]()
-    val acceptor = new Thread(() => try held.put(server.accept()) catch { case _: Exception => })
-    acceptor.setDaemon(true)
-    acceptor.start()
-    try {
-      val sink = new RedisKeyValueSink("127.0.0.1", server.getLocalPort)
+    FakeRedis.withStalledServer { port =>
+      val sink = new RedisKeyValueSink("127.0.0.1", port)
       val t0 = System.nanoTime()
       a[SocketTimeoutException] should be thrownBy sink.put("k", "{}")
       val waitedMs = (System.nanoTime() - t0) / 1e6
       waitedMs should be >= (RedisKeyValueSink.TimeoutMs * 0.9)
       waitedMs should be < (RedisKeyValueSink.TimeoutMs * 3.0)
-    } finally {
-      server.close()
-      Option(held.poll()).foreach(_.close())
     }
   }
 

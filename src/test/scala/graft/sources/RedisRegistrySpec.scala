@@ -1,5 +1,7 @@
 package graft.sources
 
+import java.net.SocketTimeoutException
+
 import org.apache.spark.sql.Row
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
@@ -143,5 +145,16 @@ class RedisRegistrySpec extends SparkSpec {
       back.count() shouldBe view.count()
       back.orderBy("u_plate").collect().toSeq shouldBe view.collect().toSeq
     } finally redis.stop()
+  }
+
+  "RedisRegistry.scanValues" should "fail within its timeout when the server never answers" in {
+    FakeRedis.withStalledServer { port =>
+      val t0 = System.nanoTime()
+      a[SocketTimeoutException] should be thrownBy
+        RedisRegistry.scanValues("127.0.0.1", port, "user:")
+      val waitedMs = (System.nanoTime() - t0) / 1e6
+      waitedMs should be >= (RedisKeyValueSink.TimeoutMs * 0.9)
+      waitedMs should be < (RedisKeyValueSink.TimeoutMs * 3.0)
+    }
   }
 }

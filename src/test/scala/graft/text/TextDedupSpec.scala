@@ -174,33 +174,6 @@ class TextDedupSpec extends SparkSpec {
     }
   }
 
-  it should "restore the session shuffle-partition setting after the iterative loop" in {
-    // under -Dgraft.cc.parts=adaptive the loop scopes
-    // spark.sql.shuffle.partitions to the edge-derived count
-    // (Adaptive.loopShufflePartitions) — a leak of that scoped value
-    // would silently re-partition every LATER query in the session
-    val key = "spark.sql.shuffle.partitions"
-    val before = spark.conf.get(key)
-    val pairs = (1L until 10L).map(i => (i, i + 1)).toDF("doc_a", "doc_b")
-    val e = pairs.selectExpr("doc_a as src", "doc_b as dst")
-    System.setProperty("graft.cc.parts", "adaptive")
-    try {
-      // rowsPerPartition = 1 forces the derived count (2·9 = 18) above the
-      // session constant (4), so the scoped value actually DIFFERS from the
-      // restored one — at the default density target a 9-edge graph derives
-      // exactly the session floor and this test would pass even with the
-      // finally-restore deleted (the round-16 advice)
-      TextDedup.iterativeGroups(e, maxIters = 25, edgeCount = 9L,
-        rowsPerPartition = 1L).collect()
-      spark.conf.get(key) shouldBe before
-      // ...and restored even when the loop throws (non-convergence)
-      an[IllegalStateException] should be thrownBy
-        TextDedup.iterativeGroups(e, maxIters = 2, edgeCount = 9L,
-          rowsPerPartition = 1L).collect()
-      spark.conf.get(key) shouldBe before
-    } finally System.clearProperty("graft.cc.parts")
-  }
-
   it should "return a lineage-truncated plan (no join survives the loop)" in {
     val pairs = (1L until 10L).map(i => (i, i + 1)).toDF("doc_a", "doc_b")
     val out = TextDedup.duplicateGroups(pairs, "doc_a", "doc_b",
